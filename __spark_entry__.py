@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value-hash). ``python tools/compare.py <sf_dir>`` runs the same check.
 
 All real logic lives in the ``streamprocessors_spark`` package; this file
 just adapts the registry to the driver's shape.
@@ -35,18 +35,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so queries the driver has not yet verified come first (the
-    round-1 correctness pass truncated at ~50 entries).
-    """
-    return {name: q.fn for name, q in plans.ordered_registry().items()}
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return {name: q.fn for name, q in plans.REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL for every SQL-expressible query."""
+    """DuckDB-runnable oracle SQL for every SQL-expressible query, in
+    registration order."""
     return {
         name: q.oracle
-        for name, q in plans.ordered_registry().items()
+        for name, q in plans.REGISTRY.items()
         if q.oracle is not None
     }

@@ -4737,8 +4737,8 @@ def _rank_two_level(
         ]
         rows = (
             df.repartitionByRange(nparts, *cols)
-            .select(F.spark_partition_id().alias("part"), "*")
-            .groupBy("part")
+            .select(F.spark_partition_id().alias("__sp_part"), "*")
+            .groupBy("__sp_part")
             .agg(
                 F.min(F.struct(*cols)).alias("mn"),
                 (
@@ -4748,7 +4748,7 @@ def _rank_two_level(
             )
             .collect()  # bounded: one row per suffix-rank partition (fixed count)
         )
-        rows.sort(key=lambda rw: rw["part"])
+        rows.sort(key=lambda rw: rw["__sp_part"])
         if stats_out is not None:
             # range partitions are disjoint in key space, so the sum of
             # per-partition distinct-key counts IS the global key count
@@ -4771,22 +4771,22 @@ def _rank_two_level(
             F.create_map(*pairs) if pairs
             else F.create_map(F.lit(0), F.lit(0))
         )
-        w_local = Window.partitionBy("part").orderBy(*key_cols)
+        w_local = Window.partitionBy("__sp_part").orderBy(*key_cols)
         rank_fn = F.dense_rank() if dense else F.row_number()
         return (
-            df.withColumn("part", part_expr.cast("int"))
+            df.withColumn("__sp_part", part_expr.cast("int"))
             .withColumn("lr", rank_fn.over(w_local))
             .withColumn(
                 "r",
-                (off_map[F.col("part")] + F.col("lr")).cast("bigint"),
+                (off_map[F.col("__sp_part")] + F.col("lr")).cast("bigint"),
             )
-            .drop("part", "lr")
+            .drop("__sp_part", "lr")
         )
-    ranged = df.withColumn("part", part_of)
-    w_local = Window.partitionBy("part").orderBy(*key_cols)
+    ranged = df.withColumn("__sp_part", part_of)
+    w_local = Window.partitionBy("__sp_part").orderBy(*key_cols)
     rank_fn = F.dense_rank() if dense else F.row_number()
     local = ranged.withColumn("lr", rank_fn.over(w_local))
-    counts = ranged.groupBy("part").agg(
+    counts = ranged.groupBy("__sp_part").agg(
         (F.countDistinct(*cols) if dense else F.count(F.lit(1))).alias("nk")
     )
     offsets = counts.withColumn(
@@ -4795,18 +4795,18 @@ def _rank_two_level(
             # bounded: counts is one row per range-partition id — shuffle-
             # partition-count-sized, independent of corpus rows
             F.sum("nk").over(
-                Window.orderBy("part").rowsBetween(
+                Window.orderBy("__sp_part").rowsBetween(
                     Window.unboundedPreceding, -1
                 )
             ),
             F.lit(0),
         ),
-    ).select("part", "off")
+    ).select("__sp_part", "off")
     # bounded: offsets has exactly #partitions rows
     return (
-        local.join(F.broadcast(offsets), "part")
+        local.join(F.broadcast(offsets), "__sp_part")
         .withColumn("r", (F.col("off") + F.col("lr")).cast("bigint"))
-        .drop("part", "lr", "off")
+        .drop("__sp_part", "lr", "off")
     )
 
 
@@ -6125,6 +6125,11 @@ def _nb_trained(spark: SparkSession, sf_dir: str) -> dict:
     return corpus_cached(_NB_TRAINED_CACHE, spark, sf_dir, build)
 
 
+def _sql_str(v: str) -> str:
+    """Spark SQL string literal for ``v`` (backslash and quote escaped)."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 @register(
     "nb_lang_classifier",
     oracle=f"""
@@ -6169,9 +6174,12 @@ def nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so every score is bit-identical (the oracle re-derives the model
     # from scratch and the hash gate proves it).
     model = _nb_trained(spark, sf_dir)
+    # classes with no training tokens drop out, as in the oracle's inner
+    # JOIN tc; their docs still count in docs_total (the oracle's tot)
+    classes = [(lg, d, t) for lg, d, t in model["cls"] if t > 0]
     rows = ", ".join(
-        f"('{lg}', CAST({d} AS BIGINT), CAST({t} AS BIGINT))"
-        for lg, d, t in model["cls"]
+        f"({_sql_str(lg)}, CAST({d} AS BIGINT), CAST({t} AS BIGINT))"
+        for lg, d, t in classes
     )
     cls_lit = spark.sql(
         f"SELECT col1 AS lang, col2 AS docs_c, col3 AS tok_c"
@@ -6214,9 +6222,9 @@ def nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # class index for the packed argmax key: lang-ASC positions (the
     # trained class axis — `s` fans out over exactly those languages)
-    langs = [lg for lg, _, _ in model["cls"]]
     idx_case = " ".join(
-        f"WHEN '{lg}' THEN {i}" for i, lg in enumerate(langs)
+        f"WHEN {_sql_str(lg)} THEN {i}"
+        for i, (lg, _, _) in enumerate(classes)
     )
     return (
         s.selectExpr(

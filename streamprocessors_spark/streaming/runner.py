@@ -46,9 +46,21 @@ _SCHEMA_CACHE: dict = {}
 _PENDING_PARTS: list = []
 
 
+def _input_bytes(path: str) -> int:
+    """Bytes of an input file, or of every file under a directory of
+    part-files (``getsize`` on a directory is only its inode size)."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
 def _suggest_partitions(spark: SparkSession, path: str) -> None:
     try:
-        n_bytes = os.path.getsize(path)
+        n_bytes = _input_bytes(path)
     except OSError:
         return
     try:
@@ -196,7 +208,7 @@ def _spread_small_input(
     (measured: 8-9 tasks beats 32 on a 0.6 MB fixture — tiny tasks cost
     more than they parallelize)."""
     try:
-        n_bytes = os.path.getsize(path)
+        n_bytes = _input_bytes(path)
     except OSError:
         return df
     try:

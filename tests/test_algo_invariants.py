@@ -1951,3 +1951,85 @@ def test_upsert_dedup_randomized_vs_from_scratch(spark, monkeypatch):
             f"seed {seed}: upsert diverged from from-scratch truth: "
             f"{ {k: (out.get(k), fresh[k]) for k in fresh if out.get(k) != fresh[k]} }"
         )
+
+
+# ---------------------------------------------------------------------------
+# Two-level rank: the synthetic partition id never meets a caller column
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("dense", [True, False])
+def test_rank_two_level_keeps_caller_part_column(spark, dense):
+    from streamprocessors_spark.plans.llm_ops import _rank_two_level
+
+    keys = [5, 3, 3, 9, 1, 5, 5, 7, 2, 9, 4, 3]
+    df = spark.createDataFrame(
+        [(k, f"p{i}") for i, k in enumerate(keys)], "k bigint, part string"
+    )
+    out = _rank_two_level(df, ["k"], dense=dense).collect()
+    assert sorted(r["part"] for r in out) == sorted(
+        f"p{i}" for i in range(len(keys))
+    )
+    distinct = sorted(set(keys))
+    for r in out:
+        if dense:
+            assert r["r"] == distinct.index(r["k"]) + 1
+        else:
+            # row_number: ties take consecutive ranks in some order
+            below = sum(1 for k in keys if k < r["k"])
+            assert below < r["r"] <= below + keys.count(r["k"])
+    if not dense:
+        assert sorted(r["r"] for r in out) == list(range(1, len(keys) + 1))
+
+
+# ---------------------------------------------------------------------------
+# NB serving: token-less classes and quoted class names match the oracle
+# ---------------------------------------------------------------------------
+
+
+def test_nb_lang_classifier_edge_corpus_matches_oracle(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streamprocessors_spark import plans
+    from streamprocessors_spark.plans.llm_ops import LM_TRAIN_MOD
+    from tools.compare import compare_query, duckdb_conn
+
+    m = LM_TRAIN_MOD
+    docs = [
+        # training slice (doc_id % LM_TRAIN_MOD = 0); "xx" has only
+        # empty docs, so it has no tokens and the oracle drops it
+        (0, "alpha beta alpha", "en"),
+        (m, "beta gamma", "en"),
+        (2 * m, "delta epsilon", "it's"),
+        (3 * m, "", "xx"),
+        (4 * m, "   ", "xx"),
+        (5 * m, "", "xx"),
+        # scored docs; the last has only unseen tokens, where a kept
+        # "xx" (likelihood 1/v per token) would win the argmax
+        (1, "alpha beta", "en"),
+        (2, "delta delta epsilon", "it's"),
+        (3, "zeta eta theta", "en"),
+        (4, "", "xx"),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([d for d, _, _ in docs], pa.int64()),
+                "text": [t for _, t, _ in docs],
+                "lang": [lg for _, _, lg in docs],
+                "source": ["src0"] * len(docs),
+                "n_chars": pa.array([len(t) for _, t, _ in docs], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    q = plans.REGISTRY["nb_lang_classifier"]
+    con = duckdb_conn(str(tmp_path))
+    try:
+        df = q.fn(spark, str(tmp_path))
+        res = compare_query(q.name, df, con, q.oracle)
+    finally:
+        con.close()
+    assert res.ok, res
+    assert res.spark_rows == 3

@@ -36,3 +36,12 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
         f"{name}: rows spark={res.spark_rows} duckdb={res.oracle_rows} "
         f"schema_match={res.schema_match} hash_match={res.hash_match} {res.detail}"
     )
+
+
+def test_driver_contract_lists_registry_in_order():
+    import __spark_entry__ as e
+
+    assert list(e.queries()) == list(plans.REGISTRY)
+    assert list(e.oracle_sql()) == [
+        n for n, q in plans.REGISTRY.items() if q.oracle is not None
+    ]

@@ -53,6 +53,39 @@ def test_suggestion_scales_with_bytes_and_clamps(spark, sf_dir):
     assert min(max(2, big), ceiling) == ceiling
 
 
+def test_directory_input_sized_by_its_part_files(spark, tmp_path, monkeypatch):
+    # a dataset directory of part-files sizes by the bytes of its parts,
+    # not by the directory inode (which would floor every dataset to 2)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "docs.parquet"
+    d.mkdir()
+    for i in range(3):
+        blob = pa.array([os.urandom(1024) for _ in range(128)], pa.binary())
+        pq.write_table(
+            pa.table({"b": blob}), d / f"part-{i}.parquet", compression="none"
+        )
+    total = sum(f.stat().st_size for f in d.iterdir())
+    assert total > 3 * 128 * 1024
+    # just over a fifth of the parts per partition -> exactly 5
+    monkeypatch.setattr(R, "_STREAM_TARGET_BYTES", total // 5 + 1)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 5
+
+    R._PENDING_PARTS.clear()
+    R._suggest_partitions(spark, str(d))
+    assert R._PENDING_PARTS.pop() == 5
+
+    # an input already past one split is left to split natively
+    df = spark.range(1)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(total - 1))
+    try:
+        assert R._spread_small_input(spark, df, str(d)) is df
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
 def test_conf_latched_and_restored(spark, sf_dir):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     ev = R.stream_events(spark, sf_dir)

@@ -4,6 +4,12 @@ For each declared query the driver runs the Spark plan and the DuckDB oracle
 over the same parquet fixtures and compares row count, schema (column names,
 sorted) and an order-insensitive value hash. This module reproduces that
 check locally so every operator can be validated before the round ends.
+
+Usage: python tools/compare.py <sf_dir> [query ...]
+Runs the named queries (default: every registered query, in registration
+order) under a vanilla local[8] session (8 shuffle partitions, UI off) and
+compares each against its DuckDB oracle. Prints OK/FAIL/ERR/ROWS-ONLY per
+query, then ``FAILURES: N``; exits 1 on any failure.
 """
 
 from __future__ import annotations
@@ -11,6 +17,8 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import sys
+import time
 from dataclasses import dataclass
 
 import duckdb
@@ -128,3 +136,54 @@ def compare_query(name, spark_df, con, oracle: str) -> CompareResult:
         hash_match=hash_match,
         detail=detail,
     )
+
+
+def main(argv: list[str]) -> int:
+    sf_dir, names = argv[0], argv[1:]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName("oracle-compare")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.shuffle.partitions", "8")
+        .getOrCreate()
+    )
+    import __spark_entry__ as e
+
+    qs, osql = e.queries(), e.oracle_sql()
+    con = duckdb_conn(sf_dir)
+    bad = 0
+    for name in names or qs:
+        t0 = time.time()
+        try:
+            df = qs[name](spark, sf_dir)
+            if name not in osql:
+                print("ROWS-ONLY", name, df.count(), flush=True)
+                continue
+            r = compare_query(name, df, con, osql[name])
+            if not r.ok:
+                bad += 1
+            print(
+                "OK  " if r.ok else "FAIL",
+                name,
+                r.spark_rows,
+                f"{time.time() - t0:.1f}s",
+                r.detail[:160],
+                flush=True,
+            )
+        except Exception as ex:  # noqa: BLE001
+            bad += 1
+            print("ERR ", name, str(ex)[:240], flush=True)
+    con.close()
+    spark.stop()
+    print("FAILURES:", bad)
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
+    raise SystemExit(main(sys.argv[1:]))
